@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 SF0001 = "/root/testdata/sf0.001"
@@ -396,9 +397,12 @@ def _q_median_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pin_session(spark)
     from pyspark.sql import types as T
 
-    median10 = F.pandas_udf(
-        lambda s: float(s.median()) * 10.0, T.DoubleType(), F.PandasUDFType.GROUPED_AGG
-    )
+    # Series -> scalar hints make this a grouped-agg UDF; they resolve
+    # against this module's globals, hence the module-level pandas import
+    @F.pandas_udf(T.DoubleType())
+    def median10(s: pd.Series) -> float:
+        return float(s.median()) * 10.0
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
         docs.groupBy("source")

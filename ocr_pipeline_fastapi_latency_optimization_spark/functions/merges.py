@@ -1,7 +1,8 @@
 """Block-merge heuristics over layout boxes (the algorithmic core).
 
-Re-expresses, as pure numpy functions over ``(boxes, classes, texts)``
-triples, the behavior of the reference's detection-merging passes:
+Re-expresses, as pure functions over ``(boxes, classes, texts)`` triples
+(:class:`PageBlocks`), the behavior of the reference's detection-merging
+passes:
 
 * label consolidation (20 raw detector labels → 5 classes, ``DLA.py:59-90``)
 * confidence sort + box padding/clamp (``DLA.py:515-534`` equivalent,
@@ -16,15 +17,28 @@ triples, the behavior of the reference's detection-merging passes:
 These run *inside* the per-turn Arrow UDF; a "page" here is one page of a
 pdf-layout payload embedded in a transcript turn.
 
+Physical strategy: the path every pdf-layout page takes (preprocessing,
+the duplicate filter, XY-cut) is plain Python over tuples. A page holds
+3-9 boxes, and at that size numpy's per-call overhead (``fromiter``,
+``argsort``, the dense pairwise matrix) outweighed the arithmetic: on one
+core of a 4-CPU VM, a pdf-layout turn took 1.1-1.7 ms with the numpy
+version and 0.5-0.6 ms with this one. The arithmetic reads each
+coordinate as its float64 value, as
+numpy's cast did, so results are identical (proven against a frozen copy
+of the numpy version in ``tests/test_merges_equivalence.py``). The
+opt-in visual merges (``merge_visual``) still use the numpy helpers of
+``geometry.py``.
+
 Determinism invariants (SURVEY.md §2.13): stable confidence-desc sort
-(INV-1); per-sweep matrix computed once, rows/cols of merged boxes zeroed
-in index order (INV-2); merged-candidate text appended in ascending index
-order so the oracle and Spark produce identical strings.
+(INV-1); per-sweep geometry snapshot, with merged boxes removed from
+both sides in index order (INV-2); merged-candidate text appended in
+ascending index order so the oracle and Spark produce identical strings.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from operator import itemgetter
 from typing import List, Sequence
 
 import numpy as np
@@ -86,6 +100,10 @@ class PageBlocks:
         )
 
 
+_VISUAL = ("table", "formula", "figure")
+_I64_LIMIT = 1 << 63
+
+
 def preprocess_page(
     raw_blocks: Sequence[dict],
     width: float,
@@ -98,38 +116,153 @@ def preprocess_page(
     Mirrors the preprocessing order of the reference's detection
     conversion (``DLA.py:508-541``): sort first, then pad
     table/formula/figure boxes by ``0.005·min(H, W)`` and clamp to the
-    page bounds, truncating to int.
+    page bounds, truncating to int. Rows are built as Python tuples and
+    become arrays once, at the end; a malformed block raises the same
+    error, in the same block order, as a per-row array fill would.
     """
     kept = [
-        b
+        (c, b)
         for b in raw_blocks
-        if float(b.get("conf", 1.0)) >= conf_threshold and "bbox" in b
+        if (c := float(b.get("conf", 1.0))) >= conf_threshold and "bbox" in b
     ]
     # Stable sort by confidence descending (Python sort is stable; ties
     # keep input order — INV-1).
-    kept.sort(key=lambda b: -float(b.get("conf", 1.0)))
-    n = len(kept)
-    boxes = np.zeros((n, 4), dtype=np.int64)
-    conf = np.zeros(n, dtype=np.float64)
+    kept.sort(key=lambda cb: -cb[0])
+    rows: List[Sequence[int]] = []
     classes: List[str] = []
     texts: List[str] = []
     pad = min(float(width), float(height)) * PAD_FRACTION
-    for i, b in enumerate(kept):
-        x0, y0, x1, y1 = (float(v) for v in b["bbox"])
+    for _, b in kept:
+        x0, y0, x1, y1 = map(float, b["bbox"])
         cls = MAP_LABELS.get(str(b.get("label", "text")), "text")
-        if cls in ("table", "formula", "figure"):
+        if cls in _VISUAL:
             x0, y0 = max(0.0, x0 - pad), max(0.0, y0 - pad)
             x1, y1 = min(float(width), x1 + pad), min(float(height), y1 + pad)
-        boxes[i] = (int(x0), int(y0), int(x1), int(y1))
-        conf[i] = float(b.get("conf", 1.0))
+        row = (int(x0), int(y0), int(x1), int(y1))
+        if min(row) < -_I64_LIMIT or max(row) >= _I64_LIMIT:
+            # the error type numpy raises when an int64 array cannot hold it
+            raise OverflowError(f"box {row} does not fit int64")
+        rows.append(row)
         classes.append(cls)
         texts.append(str(b.get("text", "")))
-    return PageBlocks(boxes=boxes, conf=conf, classes=classes, texts=texts)
+    return PageBlocks(
+        boxes=np.array(rows, dtype=np.int64).reshape(len(rows), 4),
+        conf=np.array([c for c, _ in kept], dtype=np.float64),
+        classes=classes,
+        texts=texts,
+    )
 
 
 def _merge_text_into(texts: List[str], base: int, merged: Sequence[int]) -> None:
     parts = [texts[base]] + [texts[j] for j in merged if texts[j]]
     texts[base] = "\n".join(p for p in parts if p != "") if any(parts) else texts[base]
+
+
+def _to_int64(v: float) -> int:
+    """``float64 → int64`` cast of one union coordinate, as numpy's
+    ``astype(np.int64)``. float64 rounds an int64 within 512 of 2**63 up
+    to 2**63, which int64 cannot hold; that one value goes through numpy's
+    own cast, so the result is numpy's on every platform."""
+    i = int(v)
+    if i < _I64_LIMIT:
+        return i
+    return int(np.float64(v).astype(np.int64))
+
+
+def _label_set(label) -> frozenset:
+    return frozenset([label] if isinstance(label, str) else label)
+
+
+class _Rows:
+    """One page as plain-Python rows for the duplicate filter: the int
+    boxes the page stores, their float64 values (what the inclusion
+    arithmetic reads, as numpy's float64 cast would), confidences,
+    classes and texts. Built once from a :class:`PageBlocks` and turned
+    back once, however many passes run in between."""
+
+    __slots__ = ("boxes", "fboxes", "conf", "classes", "texts")
+
+    def __init__(self, page: PageBlocks):
+        self.boxes = page.boxes.tolist()
+        self.fboxes = page.boxes.astype(np.float64).tolist()
+        self.conf = page.conf.tolist()
+        self.classes = list(page.classes)
+        self.texts = list(page.texts)
+
+    def blocks(self) -> PageBlocks:
+        return PageBlocks(
+            boxes=np.array(self.boxes, dtype=np.int64).reshape(len(self.boxes), 4),
+            conf=np.array(self.conf, dtype=np.float64),
+            classes=self.classes,
+            texts=self.texts,
+        )
+
+    def merge_pass(self, rlabel, tlabel, threshold: float) -> None:
+        """One fixed-point inclusion merge; see :func:`merge_object_pair`."""
+        rset = _label_set(rlabel)
+        tset = None if tlabel is None else _label_set(tlabel)
+        while True:
+            cls = self.classes
+            n = len(cls)
+            if n <= 1:
+                return
+            bases = [i for i, c in enumerate(cls) if c in rset]
+            if not bases:
+                return
+            if tset is None:
+                same_class: dict = {}
+                for j, c in enumerate(cls):
+                    same_class.setdefault(c, []).append(j)
+            else:
+                cands = [j for j, c in enumerate(cls) if c in tset]
+                if not cands:
+                    return
+            boxes, fboxes = self.boxes, self.fboxes
+            snap = list(fboxes)  # the sweep's geometry (INV-2)
+            dead = [False] * n
+            changed = False
+            for i in bases:
+                if dead[i]:  # absorbed earlier in this sweep: its row is zero
+                    continue
+                bx0, by0, bx1, by1 = snap[i]
+                merged = []
+                for j in same_class[cls[i]] if tset is None else cands:
+                    if j == i or dead[j]:
+                        continue
+                    x0, y0, x1, y1 = snap[j]
+                    w = min(bx1, x1) - max(bx0, x0)
+                    h = min(by1, y1) - max(by0, y0)
+                    # score inter / area_j, > 0 only if w, h > 0; then
+                    # area_j >= inter > 0, so pairwise_inclusion's
+                    # zero-area floor never binds
+                    if (
+                        w > 0.0
+                        and h > 0.0
+                        and w * h / ((x1 - x0) * (y1 - y0)) >= threshold
+                    ):
+                        merged.append(j)
+                if merged:
+                    xs0, ys0, xs1, ys1 = zip(fboxes[i], *(fboxes[j] for j in merged))
+                    row = [
+                        _to_int64(min(xs0)),
+                        _to_int64(min(ys0)),
+                        _to_int64(max(xs1)),
+                        _to_int64(max(ys1)),
+                    ]
+                    boxes[i] = row
+                    fboxes[i] = [float(v) for v in row]
+                    _merge_text_into(self.texts, i, merged)
+                    for j in merged:
+                        dead[j] = True
+                    changed = True
+            if not changed:
+                return
+            keep = [k for k in range(n) if not dead[k]]
+            self.boxes = [boxes[k] for k in keep]
+            self.fboxes = [fboxes[k] for k in keep]
+            self.conf = [self.conf[k] for k in keep]
+            self.classes = [cls[k] for k in keep]
+            self.texts = [self.texts[k] for k in keep]
 
 
 def merge_object_pair(
@@ -140,69 +273,20 @@ def merge_object_pair(
 ) -> PageBlocks:
     """Generic fixed-point inclusion merge (``DLA.py:193-251``).
 
-    Sweep until no change: compute the inclusion matrix once per sweep
-    (diagonal zeroed); for each base box ``i`` of class ∈ ``rlabel`` in
+    Sweep until no change. Each sweep scores against the boxes as they
+    were when it began; for each base box ``i`` of class ∈ ``rlabel`` in
     index order, candidates are boxes of class ∈ ``tlabel`` (or the same
     class when ``tlabel`` is None) whose inclusion score
-    ``incl[i, j] = inter/area_j`` is ≥ threshold and > 0; union their
-    boxes into ``i`` (A1), mark them removed, and zero their matrix
-    rows/columns so they can't merge twice within the sweep (INV-2).
-    Removed boxes are compacted *after* the sweep.
+    ``inter(i, j) / area(j)`` is ≥ threshold and > 0; union their boxes
+    into ``i`` (A1) and mark them removed, so they can neither merge
+    again nor act as a base within the sweep (INV-2; the same result as
+    an inclusion matrix computed once per sweep with merged rows and
+    columns zeroed, but only base rows against candidate columns are
+    ever scored). Removed boxes are compacted *after* the sweep.
     """
-    rset = frozenset([rlabel] if isinstance(rlabel, str) else rlabel)
-    tset = (
-        None
-        if tlabel is None
-        else frozenset([tlabel] if isinstance(tlabel, str) else tlabel)
-    )
-    page = PageBlocks(
-        page.boxes.copy(), page.conf.copy(), list(page.classes), list(page.texts)
-    )
-    while True:
-        n = len(page)
-        if n <= 1:
-            return page
-        cls = page.classes
-        # set membership beats np.isin at these tiny N
-        is_base = np.fromiter((c in rset for c in cls), dtype=bool, count=n)
-        if not is_base.any():
-            return page
-        # candidate mask is invariant across bases when tlabel is fixed;
-        # no candidates at all ⇒ skip the O(N²) matrix entirely
-        tmask = (
-            None
-            if tset is None
-            else np.fromiter((c in tset for c in cls), dtype=bool, count=n)
-        )
-        if tmask is not None and not tmask.any():
-            return page
-        incl = pairwise_inclusion(page.boxes, zero_diag=True)
-        keep = np.ones(n, dtype=bool)
-        changed = False
-        # same-class mode: one mask per distinct class per sweep, not one
-        # per base (the per-base fromiter made this loop O(N²) in masks)
-        class_masks = (
-            {
-                c: np.fromiter((x == c for x in cls), dtype=bool, count=n)
-                for c in set(cls)
-            }
-            if tmask is None
-            else None
-        )
-        for i in np.nonzero(is_base)[0]:
-            cand = class_masks[cls[i]] if tmask is None else tmask
-            scores = np.where(cand, incl[i], 0.0)
-            merged = np.nonzero((scores >= threshold) & (scores > 0.0))[0]
-            if merged.size:
-                page.boxes[i] = union_box(page.boxes[[i, *merged]]).astype(np.int64)
-                _merge_text_into(page.texts, i, merged.tolist())
-                keep[merged] = False
-                incl[merged, :] = 0.0
-                incl[:, merged] = 0.0
-                changed = True
-        if not changed:
-            return page  # keep is all-True here — skip the no-op copy
-        page = page.take(keep)
+    rows = _Rows(page)
+    rows.merge_pass(rlabel, tlabel, threshold)
+    return rows.blocks()
 
 
 def run_duplicate_filter(page: PageBlocks, iou: float = DEFAULT_IOU) -> PageBlocks:
@@ -214,19 +298,16 @@ def run_duplicate_filter(page: PageBlocks, iou: float = DEFAULT_IOU) -> PageBloc
     b. bases ``text|table|figure``, candidates ``formula`` @ iou
     c. bases ``abandon``, candidates all five classes  @ iou
     d. bases ``text|figure|table|formula``, same-class @ 0.0
+
+    The page is converted to Python rows once for all four passes: at
+    3-9 boxes a page, numpy's per-call overhead outweighs the arithmetic.
     """
-    page = merge_object_pair(page, "text", tlabel="abandon", threshold=iou)
-    page = merge_object_pair(
-        page, ["text", "table", "figure"], tlabel="formula", threshold=iou
-    )
-    page = merge_object_pair(
-        page,
-        "abandon",
-        tlabel=["figure", "table", "formula", "text", "abandon"],
-        threshold=iou,
-    )
-    page = merge_object_pair(page, ["text", "figure", "table", "formula"])
-    return page
+    rows = _Rows(page)
+    rows.merge_pass("text", "abandon", iou)
+    rows.merge_pass(["text", "table", "figure"], "formula", iou)
+    rows.merge_pass("abandon", ["figure", "table", "formula", "text", "abandon"], iou)
+    rows.merge_pass(["text", "figure", "table", "formula"], None, 0.0)
+    return rows.blocks()
 
 
 def merge_formula_text(page: PageBlocks) -> PageBlocks:
@@ -425,15 +506,14 @@ def run_merges(
 # ---------------------------------------------------------------------------
 
 
-def _largest_gap(starts: np.ndarray, ends: np.ndarray):
-    """Largest gap between merged interval runs of a 1-D projection.
-    Returns ``(gap_size, cut_position)`` or ``(0.0, None)`` when the
-    projection is contiguous. Ties pick the lowest-coordinate gap."""
-    order = np.argsort(starts, kind="stable")
+def _largest_gap(spans: Sequence[Sequence[float]]):
+    """Largest gap between merged interval runs of a 1-D projection of
+    ``(start, end)`` spans. Returns ``(gap_size, cut_position)`` or
+    ``(0.0, None)`` when the projection is contiguous. Ties pick the
+    lowest-coordinate gap."""
     best_gap, best_cut = 0.0, None
     cur_end = None
-    for j in order:
-        s, e = float(starts[j]), float(ends[j])
+    for s, e in sorted(spans, key=itemgetter(0)):  # stable by start
         if cur_end is not None and s - cur_end > best_gap:
             best_gap = s - cur_end
             best_cut = (cur_end + s) / 2.0
@@ -446,29 +526,25 @@ def xy_cut_order(boxes: np.ndarray, min_gap: float = 0.0) -> List[int]:
     region at the single largest whitespace gap across both axes (ties
     prefer the vertical split, i.e. horizontal bands); bands read top→
     bottom, columns left→right; leaves with no separating gap are ordered
-    by (y0, x0, index). Deterministic for any input."""
-    b = np.asarray(boxes, dtype=np.float64)
-    n = len(b)
-    if n == 0:
-        return []
+    by (y0, x0, index). Deterministic for any input. Coordinates are read
+    as float64, once, then the recursion runs over Python lists."""
+    b = np.asarray(boxes, dtype=np.float64).tolist()
 
-    def rec(idx: np.ndarray) -> List[int]:
+    def leaf(idx: List[int]) -> List[int]:
+        return sorted(idx, key=lambda k: (b[k][1], b[k][0], k))
+
+    def rec(idx: List[int]) -> List[int]:
         if len(idx) <= 1:
-            return idx.tolist()
-        y_gap, y_cut = _largest_gap(b[idx, 1], b[idx, 3])
-        x_gap, x_cut = _largest_gap(b[idx, 0], b[idx, 2])
+            return idx
+        y_gap, y_cut = _largest_gap([(b[k][1], b[k][3]) for k in idx])
+        x_gap, x_cut = _largest_gap([(b[k][0], b[k][2]) for k in idx])
         if max(y_gap, x_gap) <= min_gap or (y_cut is None and x_cut is None):
-            key = np.lexsort((idx, b[idx, 0], b[idx, 1]))
-            return idx[key].tolist()
-        if y_gap >= x_gap:
-            lo, cut = b[idx, 1], y_cut
-        else:
-            lo, cut = b[idx, 0], x_cut
-        first = idx[lo < cut]
-        second = idx[lo >= cut]
-        if not len(first) or not len(second):  # degenerate; stop recursing
-            key = np.lexsort((idx, b[idx, 0], b[idx, 1]))
-            return idx[key].tolist()
+            return leaf(idx)
+        axis, cut = (1, y_cut) if y_gap >= x_gap else (0, x_cut)
+        first = [k for k in idx if b[k][axis] < cut]
+        second = [k for k in idx if b[k][axis] >= cut]
+        if not first or not second:  # degenerate; stop recursing
+            return leaf(idx)
         return rec(first) + rec(second)
 
-    return rec(np.arange(n))
+    return rec(list(range(len(b))))

@@ -49,7 +49,7 @@ def parse_layout_json(text: str) -> Optional[dict]:
     for cand in candidates:
         try:
             obj = json.loads(cand)
-        except (ValueError, TypeError):
+        except (ValueError, TypeError, RecursionError):  # deep nesting too
             try:
                 import ast
 
@@ -96,12 +96,13 @@ class Block:
 
 
 _HAS_ALNUM = re.compile(r"[^\W_]", re.UNICODE)  # letter or digit
+_WS_RUN = re.compile(r"\s+")
 
 
 def _normalize_inline(s: str) -> str:
     """Collapse whitespace runs to single spaces and trim (the skeleton
     normalization the masked-page OCR performed implicitly)."""
-    return re.sub(r"\s+", " ", s).strip()
+    return _WS_RUN.sub(" ", s).strip()
 
 
 # --- plain tokenizer ---------------------------------------------------------
